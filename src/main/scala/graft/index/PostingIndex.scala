@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
@@ -30,13 +30,18 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       .map { case (t, xs) => (t, xs.size.toDouble) }.sortBy(_._1)
 
   /** Optional serving mode: pin the posting segments in executor memory
-    * (columnar cache). Filters on (tb, term) still prune via in-memory
-    * batch stats; per-query parquet decode disappears — the distributed
-    * analog of the reference's resident CSR (main.rs:531-536), except
-    * partitioned across executors instead of one heap.
+    * (columnar cache), hash-partitioned by `shard`. Filters on (tb, term)
+    * still prune via in-memory batch stats; per-query parquet decode
+    * disappears — the distributed analog of the reference's resident CSR
+    * (main.rs:531-536), except partitioned across executors instead of one
+    * heap. Because the cache is already clustered by shard, every
+    * single-input search ([[perShard]]) plans as one stage with no
+    * Exchange: cached scan -> filter -> sort -> per-shard WAND -> top-k.
+    * A partition may hold several shards; nothing assumes one.
     */
   def preload(): this.type = {
-    val df = postingsDF.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val df = postingsDF.repartition(globals.shards, col("shard"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     df.count() // materialize
     preloaded = Some(df)
     this
@@ -117,6 +122,23 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     }
   }
 
+  /** Runs `daat` once per shard over the (tb, term)-pruned blocks of
+    * `terms`. The grouping key is the `shard` COLUMN, so MapGroups asks for
+    * clustering by shard: the preloaded cache already has it (no
+    * Exchange), a parquet-backed handle plans exactly one Exchange.
+    */
+  private def perShard[U: Encoder](terms: Seq[String])(
+      daat: Iterator[BlockRow] => Iterator[U]): Dataset[U] = {
+    import spark.implicits._
+    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
+    postingsDF
+      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
+      .select("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
+        "docs_bin", "wts_bin", "tfs_bin")
+      .groupBy(col("shard")).as[Int, BlockRow]
+      .flatMapGroups((_, rows) => daat(rows))
+  }
+
   /** Top-k search -> DataFrame (doc_id, score), total order
     * (score desc, doc_id asc).
     */
@@ -151,27 +173,15 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       afterDoc: Long = Long.MinValue)
       : DataFrame = {
     import spark.implicits._
-    val terms = q.map(_._1)
-    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
     val qtf = q.toMap
-    val kk = k
-    val aS = afterScore
-    val aD = afterDoc
-    val blocks = postingsDF
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
-      .select("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
-        "docs_bin", "wts_bin", "tfs_bin")
-      .as[BlockRow]
     val exBc = tombstonesBc
-    blocks.groupByKey(_.shard)
-      .flatMapGroups { (_, rows) =>
-        val ex = PostingIndex.combinedExclusion(
-          if (exBc == null) null else exBc.value,
-          if (allowBc == null) null else allowBc.value)
-        if (conj) Wand.topKConjunctive(rows, qtf, kk, ex)
-        else Wand.topK(rows, qtf, kk, ex, aS, aD)
-      }
-      .toDF("doc_id", "score")
+    perShard(q.map(_._1)) { rows =>
+      val ex = PostingIndex.combinedExclusion(
+        if (exBc == null) null else exBc.value,
+        if (allowBc == null) null else allowBc.value)
+      if (conj) Wand.topKConjunctive(rows, qtf, k, ex)
+      else Wand.topK(rows, qtf, k, ex, afterScore, afterDoc)
+    }.toDF("doc_id", "score")
   }
 
   /** Deep pagination — the search_after contract: the top-k results
@@ -247,8 +257,8 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     }
 
   /** The shared batch candidate pool: one pruned scan over the union of
-    * all live queries' terms, ONE shuffle keyed by shard alone, every
-    * query's WAND run inside its shard group (blocks are NOT replicated
+    * all live queries' terms, ONE shuffle keyed by shard alone (none once
+    * preloaded), every query's WAND run inside its shard group (blocks are NOT replicated
     * per query — see [[searchMany]]). Emits per-(query, shard) top-k
     * candidates (query_id, doc_id, score); None when no query survives
     * analysis. The query set rides a broadcast qtf map — the right call
@@ -262,31 +272,21 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     val live = qTerms.filter(_._2.nonEmpty)
     if (live.isEmpty) return None
     val allTerms = live.flatMap(_._2.map(_._1)).distinct.sorted
-    val tbs = allTerms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
     val qtfByQuery: Map[Int, Map[String, Double]] =
       live.map { case (qid, ts) => qid -> ts.toMap }.toMap
     val bQtf = spark.sparkContext.broadcast(qtfByQuery)
-    val kk = k
-    val blocks = postingsDF
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(allTerms: _*))
-      .select("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
-        "docs_bin", "wts_bin", "tfs_bin")
-      .as[BlockRow]
     val exBc = tombstonesBc
-    Some(blocks
-      .groupByKey(_.shard)
-      .flatMapGroups { (_, rows) =>
-        // materialize the shard's block slice once; every query reuses it
-        val rs = rows.toArray
-        val ex: Long => Boolean =
-          if (exBc == null) null
-          else { val a = exBc.value; d => java.util.Arrays.binarySearch(a, d) >= 0 }
-        bQtf.value.iterator.flatMap { case (qid, qtf) =>
-          Wand.topK(rs.iterator.filter(r => qtf.contains(r.term)), qtf, kk, ex)
-            .map { case (d, s) => (qid.toLong, d, s) }
-        }
+    Some(perShard(allTerms) { rows =>
+      // materialize the shard's block slice once; every query reuses it
+      val rs = rows.toArray
+      val ex: Long => Boolean =
+        if (exBc == null) null
+        else { val a = exBc.value; d => java.util.Arrays.binarySearch(a, d) >= 0 }
+      bQtf.value.iterator.flatMap { case (qid, qtf) =>
+        Wand.topK(rs.iterator.filter(r => qtf.contains(r.term)), qtf, k, ex)
+          .map { case (d, s) => (qid.toLong, d, s) }
       }
-      .toDF("query_id", "doc_id", "score"))
+    }.toDF("query_id", "doc_id", "score"))
   }
 
   private def emptyManyResult: DataFrame =
@@ -743,11 +743,11 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * is rejected: a pure-negation query would enumerate the corpus.
     *
     * Scale shape: ONE (tb, term)-pruned scan over must ∪ should ∪ mustNot
-    * posting blocks, one shuffle keyed by shard, then a single-pass
-    * boolean DAAT per shard ([[Wand.topKBoolean]]): leapfrog over the
-    * must lists (or WAND over should), should lists probed forward at
-    * aligned targets, must-not lists probed forward as O(1)-memory
-    * exclusion cursors — no broadcast of the must-not doc set (which for
+    * posting blocks, one shuffle keyed by shard (none once preloaded),
+    * then a single-pass boolean DAAT per shard ([[Wand.topKBoolean]]):
+    * leapfrog over the must lists (or WAND over should), should lists
+    * probed forward at aligned targets, must-not lists probed forward as
+    * O(1)-memory exclusion cursors — no broadcast of the must-not doc set (which for
     * a frequent negated term would be corpus-sized), no second shuffle,
     * no decode of skipped blocks. Composes with the tombstone overlay.
     */
@@ -765,22 +765,12 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     val posQtf: Map[String, Double] = (mustQ ++ shouldQ)
       .groupBy(_._1).map { case (t, xs) => (t, xs.map(_._2).sum) }
     val mustSet = mustQ.map(_._1).toSet
-    val allTerms = (posQtf.keySet ++ notTerms).toSeq.sorted
-    val tbs = allTerms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
-    val kk = k
-    val blocks = postingsDF
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(allTerms: _*))
-      .select("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
-        "docs_bin", "wts_bin", "tfs_bin")
-      .as[BlockRow]
     val exBc = tombstonesBc
-    blocks.groupByKey(_.shard)
-      .flatMapGroups { (_, rows) =>
-        val ex = PostingIndex.combinedExclusion(
-          if (exBc == null) null else exBc.value, null)
-        Wand.topKBoolean(rows, posQtf, mustSet, notTerms, kk, ex)
-      }
-      .toDF("doc_id", "score")
+    perShard((posQtf.keySet ++ notTerms).toSeq.sorted) { rows =>
+      val ex = PostingIndex.combinedExclusion(
+        if (exBc == null) null else exBc.value, null)
+      Wand.topKBoolean(rows, posQtf, mustSet, notTerms, k, ex)
+    }.toDF("doc_id", "score")
       .withColumn("score", round(col("score"), 4))
       .orderBy(col("score").desc, col("doc_id").asc).limit(k)
   }
@@ -1137,22 +1127,13 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     import spark.implicits._
     val q = seq.groupBy(identity).toSeq
       .map { case (t, xs) => (t, xs.size.toDouble) }.sortBy(_._1)
-    val terms = q.map(_._1)
-    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
     val qtf = q.toMap
-    val blocks = postingsDF
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
-      .select("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
-        "docs_bin", "wts_bin", "tfs_bin")
-      .as[BlockRow]
     val exBc = tombstonesBc
-    blocks.groupByKey(_.shard)
-      .flatMapGroups { (_, rows) =>
-        val ex = PostingIndex.combinedExclusion(
-          if (exBc == null) null else exBc.value, null)
-        Wand.conjunctiveAll(rows, qtf, ex)
-      }
-      .toDF("doc_id", "score")
+    perShard(q.map(_._1)) { rows =>
+      val ex = PostingIndex.combinedExclusion(
+        if (exBc == null) null else exBc.value, null)
+      Wand.conjunctiveAll(rows, qtf, ex)
+    }.toDF("doc_id", "score")
   }
 
   private def phrasePositional(seq: Array[String], k: Int): DataFrame =

@@ -33,8 +33,18 @@ import graft.index.{IndexCache, Manifest, PostingIndex}
   * here (BM25 replaces both per the north rule), so `method` in a request
   * is ignored rather than rejected.
   *
-  * Serving path: preloaded index (segments pinned in executor memory),
-  * docs hydrated per request by pushed-down point lookups.
+  * `limit` must be an integer in 1..[[SearchServer.maxLimit]], else 400;
+  * a request the engine rejects (e.g. a pure-negation boolean query) is a
+  * 400 with the reason, any other failure a 500 `{"error":"internal
+  * error"}` with the exception logged, never echoed.
+  *
+  * Serving path: preloaded index (postings pinned in executor memory,
+  * hash-partitioned by shard), so a /search's top-k is one Spark stage —
+  * cached scan, per-shard WAND, top-k — with no Exchange; docs are
+  * hydrated per request by pushed-down point lookups, and a hit whose doc
+  * is missing from the corpus keeps its id, score and url with empty text
+  * fields.
+  * Responses go out with TCP_NODELAY (see the companion).
   */
 final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
 
@@ -43,7 +53,7 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
   private val docs = spark.read.parquet(s"$sfDir/documents.parquet").cache()
   docs.count() // materialize the cache
 
-  private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  private val server = SearchServer.bind(port)
 
   private def jstr(s: String): String =
     "\"" + s.flatMap {
@@ -106,7 +116,11 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
       try {
         val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
         val query = jsonField(body, "query").getOrElse("")
-        val limit = jsonField(body, "limit").flatMap(_.toIntOption).getOrElse(10)
+        val limit = jsonField(body, "limit").fold(10) { l =>
+          l.toIntOption.filter(n => n >= 1 && n <= SearchServer.maxLimit)
+            .getOrElse(throw new IllegalArgumentException(
+              s"limit must be an integer in 1..${SearchServer.maxLimit}"))
+        }
         val conj = jsonField(body, "conjunctive").contains("true")
         // extended modes beyond the reference contract (absent fields =
         // the reference behavior): must/must_not clauses -> boolean
@@ -127,7 +141,11 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
         val rows = broadcastHydrate(top)
         respond(ex, 200, rows.mkString("[", ",", "]"))
       } catch {
-        case e: Throwable => respond(ex, 500, s"""{"error":${jstr(e.toString)}}""")
+        case e: IllegalArgumentException =>
+          respond(ex, 400, s"""{"error":${jstr(e.getMessage)}}""")
+        case e: Throwable =>
+          SearchServer.log.error("/search failed", e)
+          respond(ex, 500, """{"error":"internal error"}""")
       }
     })
     server.createContext("/stats", (ex: HttpExchange) => {
@@ -169,11 +187,13 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
       .collect()
       .map(r => r.getLong(0) -> r).toMap
     hits.toSeq.map { case (id, score) =>
-      val r = meta(id)
-      s"""{"id":$id,"score":$score,"title":${jstr(r.getAs[String]("title"))},""" +
-        s""""url":${jstr(s"graft://${r.getAs[String]("source")}/$id")},""" +
-        s""""lang":${jstr(r.getAs[String]("lang"))},""" +
-        s""""source":${jstr(r.getAs[String]("source"))},"snippet":${jstr(r.getAs[String]("snippet"))}}"""
+      // a doc missing from the corpus (removed after the index was built)
+      // still answers with its id, score and url; its text fields are empty
+      def f(c: String): String = meta.get(id).map(_.getAs[String](c)).getOrElse("")
+      s"""{"id":$id,"score":$score,"title":${jstr(f("title"))},""" +
+        s""""url":${jstr(s"graft://${f("source")}/$id")},""" +
+        s""""lang":${jstr(f("lang"))},""" +
+        s""""source":${jstr(f("source"))},"snippet":${jstr(f("snippet"))}}"""
     }
   }
 
@@ -183,6 +203,21 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
 }
 
 object SearchServer {
+
+  // The JDK server writes a response's headers and body as two segments;
+  // with Nagle on, the body waits ~40 ms for the client's delayed ACK on
+  // every keep-alive response. The JDK reads this once per JVM, so it is
+  // set here, before bind() creates the first server.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  /** Largest accepted `limit`: it sizes a per-shard WAND heap. */
+  val maxLimit: Int = 1000
+
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[SearchServer])
+
+  private def bind(port: Int): HttpServer =
+    HttpServer.create(new InetSocketAddress(port), 0)
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val port = if (args.length > 1) args(1).toInt else 8080

@@ -208,7 +208,8 @@ object Explain {
     }
     locally {
       // tombstone-overlay serving: the PLAN must be identical to the plain
-      // ep2 WAND plan (same pruning, same single shuffle) — the overlay is
+      // ep2 WAND plan (same pruning, and for this parquet-backed handle the
+      // same single shuffle; a preloaded handle has none) — the overlay is
       // a broadcast consulted inside the DAAT loop, never a join or filter
       // stage over the postings
       val lcDir = idxDir + "_explain_lc"
@@ -217,9 +218,9 @@ object Explain {
         spark.read.parquet(s"$sfDir/documents.parquet")
           .select("doc_id").filter(pmod(col("doc_id"), lit(7L)) === 3),
         lcDir, "explain")
-      show("ep2 WAND with tombstone overlay (expect the SAME plan as ep2 — " +
-        "no extra join/filter stage; overlay rides a broadcast into the " +
-        "DAAT flatMapGroups)") {
+      show("ep2 WAND with tombstone overlay, parquet-backed (expect the " +
+        "SAME plan as ep2 — one Exchange by shard, no extra join/filter " +
+        "stage; overlay rides a broadcast into the DAAT flatMapGroups)") {
         new PostingIndex(spark, lcDir).search("table scan merge", 10)
       }
     }
