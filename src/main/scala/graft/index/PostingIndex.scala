@@ -1,6 +1,8 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
@@ -16,6 +18,15 @@ import graft.search.{BM25, RelationalBM25, Wand}
   *
   * Scores are exact BM25 doubles, summed per doc in lexicographic term
   * order (SURVEY.md §7.6.1) — bit-identical to the single-node oracle.
+  *
+  * Raw vs rounded: every top-k ends in the same (score desc, doc_id asc)
+  * k-cut. The `*Rounded` forms round scores to 4 decimals BEFORE that
+  * cut, because their DuckDB twins limit on `round(sum(w), 4) DESC,
+  * doc_id`: two docs whose exact scores differ but round equal at the
+  * k-th boundary must be cut by (rounded, doc_id), not by exact score
+  * (mirrors RelationalBM25.topK, which rounds inside the aggregation).
+  * The raw forms ([[search]], [[searchConjunctive]], [[searchFiltered]],
+  * [[searchMany]]) cut on the exact score and return it unrounded.
   */
 final class PostingIndex(spark: SparkSession, dir: String) {
 
@@ -26,8 +37,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
 
   def queryTerms(query: String): Seq[(String, Double)] =
     if (query == null) Seq.empty
-    else analyzer.analyze(query).toSeq.groupBy(identity).toSeq
-      .map { case (t, xs) => (t, xs.size.toDouble) }.sortBy(_._1)
+    else PostingIndex.weights(analyzer.analyze(query).toSeq.map((_, 1.0)))
 
   /** Optional serving mode: pin the posting segments in executor memory
     * (columnar cache), hash-partitioned by `shard`. Filters on (tb, term)
@@ -92,11 +102,10 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     }
   }
 
-  @volatile private var tombstonesBcRef
-      : org.apache.spark.broadcast.Broadcast[Array[Long]] = null
+  @volatile private var tombstonesBcRef: Broadcast[Array[Long]] = null
 
   // lazily (re)broadcast so close() can destroy it without killing the handle
-  private def tombstonesBc: org.apache.spark.broadcast.Broadcast[Array[Long]] =
+  private def tombstonesBc: Broadcast[Array[Long]] =
     if (tombstones.isEmpty) null
     else {
       var bc = tombstonesBcRef
@@ -110,6 +119,18 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       bc
     }
 
+  /** The DAAT loops' exclusion predicate, built on the executor from an
+    * optional allow-list (null = none): the tombstone overlay fused with
+    * it by [[PostingIndex.combinedExclusion]]. A function value, so
+    * closures capture the overlay broadcast, never this (non-serializable)
+    * handle.
+    */
+  private def exclusion: Array[Long] => (Long => Boolean) = {
+    val exBc = tombstonesBc
+    allowed => PostingIndex.combinedExclusion(
+      if (exBc == null) null else exBc.value, allowed)
+  }
+
   /** An entirely-empty corpus (or one whose docs produce no tokens) never
     * writes a postings dir; treat it as an empty segment table.
     */
@@ -122,67 +143,83 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     }
   }
 
-  /** Runs `daat` once per shard over the (tb, term)-pruned blocks of
-    * `terms`. The grouping key is the `shard` COLUMN, so MapGroups asks for
-    * clustering by shard: the preloaded cache already has it (no
+  /** `tb IN (buckets of terms) AND term IN (terms)`: directory pruning plus
+    * parquet row-group pruning on `term`, for postings and positions alike.
+    */
+  private def termFilter(terms: Seq[String]): Column = {
+    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
+    col("tb").isin(tbs: _*) && col("term").isin(terms: _*)
+  }
+
+  private def slice(terms: Seq[String]): DataFrame = postingsDF.filter(termFilter(terms))
+
+  private def blocks(df: DataFrame): Dataset[BlockRow] = {
+    import spark.implicits._
+    df.select(PostingIndex.blockCols.map(col): _*).as[BlockRow]
+  }
+
+  /** Runs `daat` once per shard over the blocks of `terms`, with the
+    * shard's [[exclusion]] predicate (fused with `allowBc`'s allow-list
+    * when given). The grouping key is the `shard` COLUMN, so MapGroups
+    * asks for clustering by shard: the preloaded cache already has it (no
     * Exchange), a parquet-backed handle plans exactly one Exchange.
     */
-  private def perShard[U: Encoder](terms: Seq[String])(
-      daat: Iterator[BlockRow] => Iterator[U]): Dataset[U] = {
+  private def perShard[U: Encoder](terms: Seq[String],
+      allowBc: Broadcast[Array[Long]] = null)(
+      daat: (Iterator[BlockRow], Long => Boolean) => Iterator[U]): Dataset[U] = {
     import spark.implicits._
-    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
-    postingsDF
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
-      .select("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
-        "docs_bin", "wts_bin", "tfs_bin")
-      .groupBy(col("shard")).as[Int, BlockRow]
-      .flatMapGroups((_, rows) => daat(rows))
+    val ex = exclusion
+    blocks(slice(terms)).groupBy(col("shard")).as[Int, BlockRow]
+      .flatMapGroups((_, rows) =>
+        daat(rows, ex(if (allowBc == null) null else allowBc.value)))
   }
+
+  /** The per-shard WAND pool of a weighted term list (None when it is
+    * empty): the union of each shard's exact-score top k — of conjunctive
+    * matches when `conj`, of candidates ranking after the `(afterScore,
+    * afterDoc)` cursor otherwise — BEFORE the global [[cut]]. `allowBc`,
+    * when non-null, is a broadcast sorted id array candidates must belong
+    * to (the attribute-filter overlay — the tombstone mechanism with the
+    * predicate inverted).
+    */
+  private def pool(q: Seq[(String, Double)], k: Int, conj: Boolean = false,
+      allowBc: Broadcast[Array[Long]] = null,
+      afterScore: Double = Double.PositiveInfinity,
+      afterDoc: Long = Long.MinValue): Option[DataFrame] =
+    if (q.isEmpty) None
+    else {
+      import spark.implicits._
+      val qtf = q.toMap
+      Some(perShard(q.map(_._1), allowBc) { (rows, ex) =>
+        if (conj) Wand.topKConjunctive(rows, qtf, k, ex)
+        else Wand.topK(rows, qtf, k, ex, afterScore, afterDoc)
+      }.toDF("doc_id", "score"))
+    }
+
+  /** The global k-cut in (score desc, doc_id asc) order, on 4-dp rounded
+    * scores when `rounded` (the class doc's raw vs rounded contract); an
+    * empty (doc_id, score) frame when there is no pool.
+    */
+  private def cut(pool: Option[DataFrame], k: Int, rounded: Boolean): DataFrame =
+    pool.fold(emptyResult)(p => roundScores(p, rounded).orderBy(PostingIndex.byScore: _*).limit(k))
+
+  private def roundScores(df: DataFrame, rounded: Boolean): DataFrame =
+    if (rounded) df.withColumn("score", round(col("score"), 4)) else df
+
+  private def emptyResult: DataFrame =
+    spark.emptyDataFrame.select(lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
 
   /** Top-k search -> DataFrame (doc_id, score), total order
     * (score desc, doc_id asc).
     */
   def search(query: String, k: Int): DataFrame =
-    merged(query, k, conj = false) match {
-      case None => emptyResult
-      case Some(pool) =>
-        pool.orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
+    cut(pool(queryTerms(query), k), k, rounded = false)
 
-  private def emptyResult: DataFrame =
-    spark.emptyDataFrame.select(lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
-
-  /** The per-shard top-k pool (union of each shard's exact-score top k),
-    * BEFORE the global order/limit — so callers can choose the final
-    * ordering key (exact score, or rounded score for the cross-engine
-    * oracle whose k-th boundary ties break on the ROUNDED value).
+  /** Oracle-comparable form of [[search]]: scores rounded to 4 decimals
+    * before the k-cut (the class doc's raw vs rounded contract).
     */
-  private def merged(query: String, k: Int, conj: Boolean): Option[DataFrame] = {
-    val q = queryTerms(query)
-    if (q.isEmpty) None else Some(mergedTerms(q, k, conj))
-  }
-
-  /** The pruned-scan + per-shard-WAND pool for an explicit weighted term
-    * list; `allowBc`, when non-null, is a broadcast sorted id array that
-    * candidates must belong to (the attribute-filter overlay — the
-    * tombstone mechanism with the predicate inverted).
-    */
-  private def mergedTerms(q: Seq[(String, Double)], k: Int, conj: Boolean,
-      allowBc: org.apache.spark.broadcast.Broadcast[Array[Long]] = null,
-      afterScore: Double = Double.PositiveInfinity,
-      afterDoc: Long = Long.MinValue)
-      : DataFrame = {
-    import spark.implicits._
-    val qtf = q.toMap
-    val exBc = tombstonesBc
-    perShard(q.map(_._1)) { rows =>
-      val ex = PostingIndex.combinedExclusion(
-        if (exBc == null) null else exBc.value,
-        if (allowBc == null) null else allowBc.value)
-      if (conj) Wand.topKConjunctive(rows, qtf, k, ex)
-      else Wand.topK(rows, qtf, k, ex, afterScore, afterDoc)
-    }.toDF("doc_id", "score")
-  }
+  def searchRounded(query: String, k: Int): DataFrame =
+    cut(pool(queryTerms(query), k), k, rounded = true)
 
   /** Deep pagination — the search_after contract: the top-k results
     * ranking STRICTLY AFTER the cursor `(afterScore, afterDoc)` in the
@@ -194,37 +231,29 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * would materialize every preceding page on one node). The cursor
     * compares in ROUNDED score space because that is the order the public
     * results (and the DuckDB twin) expose — a raw-space cursor would
-    * disagree with the very rows the caller paged from.
+    * disagree with the very rows the caller paged from. A NaN score is
+    * rejected: it compares false with everything, so it would admit every
+    * candidate and silently serve page 1; +∞ is the page-1 cursor.
     */
   def searchAfterRounded(query: String, k: Int, afterScore: Double,
-                         afterDoc: Long): DataFrame =
-    queryTerms(query) match {
-      case q if q.isEmpty => emptyResult
-      case q =>
-        mergedTerms(q, k, conj = false, allowBc = null, afterScore, afterDoc)
-          .withColumn("score", round(col("score"), 4))
-          .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
+                         afterDoc: Long): DataFrame = {
+    require(!afterScore.isNaN, "afterScore must not be NaN")
+    cut(pool(queryTerms(query), k, afterScore = afterScore, afterDoc = afterDoc),
+      k, rounded = true)
+  }
 
   /** Conjunctive (AND) variant: only documents containing EVERY query term
     * score (posting-list intersection, leapfrog DAAT). Beyond the
     * reference's OR-only semantics.
     */
   def searchConjunctive(query: String, k: Int): DataFrame =
-    merged(query, k, conj = true) match {
-      case None => emptyResult
-      case Some(pool) =>
-        pool.orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
+    cut(pool(queryTerms(query), k, conj = true), k, rounded = false)
 
-  /** Oracle-comparable conjunctive form: see [[searchRounded]]. */
+  /** Oracle-comparable conjunctive form (the class doc's raw vs rounded
+    * contract).
+    */
   def searchConjunctiveRounded(query: String, k: Int): DataFrame =
-    merged(query, k, conj = true) match {
-      case None => emptyResult
-      case Some(pool) =>
-        pool.withColumn("score", round(col("score"), 4))
-          .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
+    cut(pool(queryTerms(query), k, conj = true), k, rounded = true)
 
   /** Batch form: top-k for MANY queries in one Spark job — one pruned scan
     * over the union of all query terms, ONE shuffle keyed by shard alone
@@ -238,23 +267,15 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * doc_id).
     */
   def searchMany(queries: Seq[String], k: Int): DataFrame =
-    manyPool(queries, k) match {
-      case None       => emptyManyResult
-      case Some(pool) => rankPerQuery(pool, k)
-    }
+    rankPerQuery(manyPool(queries, k), k, rounded = false)
 
   /** Oracle-comparable batch form: per-query results identical to
-    * [[searchRounded]] — 4-decimal rounding applied to the pooled
-    * shard candidates BEFORE the per-query k-cut, so the cut happens in
-    * the same (rounded desc, doc_id asc) total order the DuckDB twin
-    * limits on ([[graft.search.OracleSql.bm25TopKMany]]).
+    * [[searchRounded]] — 4-decimal rounding applied to the pooled shard
+    * candidates BEFORE the per-query k-cut (the class doc's raw vs rounded
+    * contract; the DuckDB twin is [[graft.search.OracleSql.bm25TopKMany]]).
     */
   def searchManyRounded(queries: Seq[String], k: Int): DataFrame =
-    manyPool(queries, k) match {
-      case None => emptyManyResult
-      case Some(pool) =>
-        rankPerQuery(pool.withColumn("score", round(col("score"), 4)), k)
-    }
+    rankPerQuery(manyPool(queries, k), k, rounded = true)
 
   /** The shared batch candidate pool: one pruned scan over the union of
     * all live queries' terms, ONE shuffle keyed by shard alone (none once
@@ -267,44 +288,36 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     */
   private def manyPool(queries: Seq[String], k: Int): Option[DataFrame] = {
     import spark.implicits._
-    val qTerms: Seq[(Int, Seq[(String, Double)])] =
-      queries.zipWithIndex.map { case (q, i) => (i, queryTerms(q)) }
-    val live = qTerms.filter(_._2.nonEmpty)
-    if (live.isEmpty) return None
-    val allTerms = live.flatMap(_._2.map(_._1)).distinct.sorted
-    val qtfByQuery: Map[Int, Map[String, Double]] =
-      live.map { case (qid, ts) => qid -> ts.toMap }.toMap
-    val bQtf = spark.sparkContext.broadcast(qtfByQuery)
-    val exBc = tombstonesBc
-    Some(perShard(allTerms) { rows =>
-      // materialize the shard's block slice once; every query reuses it
-      val rs = rows.toArray
-      val ex: Long => Boolean =
-        if (exBc == null) null
-        else { val a = exBc.value; d => java.util.Arrays.binarySearch(a, d) >= 0 }
-      bQtf.value.iterator.flatMap { case (qid, qtf) =>
-        Wand.topK(rs.iterator.filter(r => qtf.contains(r.term)), qtf, k, ex)
-          .map { case (d, s) => (qid.toLong, d, s) }
-      }
-    }.toDF("query_id", "doc_id", "score"))
+    val live = queries.zipWithIndex
+      .map { case (q, i) => (i.toLong, queryTerms(q).toMap) }.filter(_._2.nonEmpty)
+    if (live.isEmpty) None
+    else {
+      val bQtf = spark.sparkContext.broadcast(live.toMap)
+      Some(perShard(live.flatMap(_._2.keys).distinct.sorted) { (rows, ex) =>
+        // materialize the shard's block slice once; every query reuses it
+        PostingIndex.batchTopK(rows.toArray, bQtf.value.iterator, k, ex)
+      }.toDF("query_id", "doc_id", "score"))
+    }
   }
 
   private def emptyManyResult: DataFrame =
     spark.emptyDataFrame.select(lit(0L).as("query_id"),
       lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
 
-  /** Per-query k-cut over a (query_id, doc_id, score) candidate pool:
-    * row_number in (score desc, doc_id asc) within each query — ONE
-    * shuffle partitioned by query_id carrying at most shards*k rows per
-    * query, fully parallel across queries (never a global sort).
+  /** Per-query k-cut over a (query_id, doc_id, score) candidate pool,
+    * rounded like [[cut]]: row_number in (score desc, doc_id asc) within
+    * each query — ONE shuffle partitioned by query_id carrying at most
+    * shards*k rows per query, fully parallel across queries (never a
+    * global sort).
     */
-  private def rankPerQuery(pool: DataFrame, k: Int): DataFrame =
-    pool.withColumn("rk",
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id")
-        .orderBy(col("score").desc, col("doc_id").asc)))
-      .filter(col("rk") <= k).drop("rk")
-      .orderBy(col("query_id"), col("score").desc, col("doc_id").asc)
+  private def rankPerQuery(pool: Option[DataFrame], k: Int, rounded: Boolean): DataFrame =
+    pool.fold(emptyManyResult) { p =>
+      roundScores(p, rounded)
+        .withColumn("rk", row_number().over(
+          Window.partitionBy("query_id").orderBy(PostingIndex.byScore: _*)))
+        .filter(col("rk") <= k).drop("rk")
+        .orderBy(col("query_id") +: PostingIndex.byScore: _*)
+    }
 
   /** Offline-evaluation batch search — the query set as a RELATION
     * (`queries`: columns (query_id: long, query: string)), for workloads
@@ -355,14 +368,11 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       .agg(count(lit(1)).cast("double").as("qtf"))
       .withColumn("qbatch", pmod(col("query_id"), lit(b.toLong)).cast("int"))
     val termBatches = qt.select("term", "qbatch").distinct()
+    val blockCols = PostingIndex.blockCols.map(col)
     val blocksK = postingsDF
-      .select("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
-        "docs_bin", "wts_bin", "tfs_bin")
+      .select(blockCols: _*)
       .join(termBatches, "term")
-      .select(col("qbatch").as("_1"),
-        struct(col("tb"), col("shard"), col("term"), col("block_id"),
-          col("n"), col("max_doc"), col("max_w"), col("docs_bin"),
-          col("wts_bin"), col("tfs_bin")).as("_2"))
+      .select(col("qbatch").as("_1"), struct(blockCols: _*).as("_2"))
       .as[(Int, BlockRow)]
       .groupByKey { case (qb, blk) => (blk.shard, qb) }
     val shardIds = (0 until globals.shards).toArray
@@ -371,43 +381,20 @@ final class PostingIndex(spark: SparkSession, dir: String) {
         col("query_id").as("_3"), col("term").as("_4"), col("qtf").as("_5"))
       .as[(Int, Int, Long, String, Double)]
       .groupByKey(r => (r._1, r._2))
-    val kk = k
-    val exBc = tombstonesBc
+    val ex = exclusion
     val pool = blocksK.cogroup(qtK) { case (_, bIt, qIt) =>
       val qts = qIt.toArray
       if (qts.isEmpty) Iterator.empty
       else {
         val rs = bIt.map(_._2).toArray
         if (rs.isEmpty) Iterator.empty
-        else {
-          val ex: Long => Boolean =
-            if (exBc == null) null
-            else { val a = exBc.value; d => java.util.Arrays.binarySearch(a, d) >= 0 }
-          qts.groupBy(_._3).iterator.flatMap { case (qid, rows) =>
-            val qtf = rows.map(r => (r._4, r._5)).toMap
-            Wand.topK(rs.iterator.filter(r => qtf.contains(r.term)), qtf, kk, ex)
-              .map { case (d, s) => (qid, d, s) }
-          }
-        }
+        else PostingIndex.batchTopK(rs, qts.groupBy(_._3).iterator.map {
+          case (qid, rows) => (qid, rows.map(r => (r._4, r._5)).toMap)
+        }, k, ex(null))
       }
     }.toDF("query_id", "doc_id", "score")
-    rankPerQuery(pool.withColumn("score", round(col("score"), 4)), k)
+    rankPerQuery(Some(pool), k, rounded = true)
   }
-
-  /** Oracle-comparable form: 4-decimal rounded scores (cross-engine float
-    * tolerance). The rounding happens BEFORE the final order/limit — the
-    * DuckDB twin limits on `round(sum(w), 4) DESC, doc_id`, so two docs
-    * whose exact scores differ but round equal at the k-th boundary must be
-    * cut by (rounded, doc_id), not by exact score (mirrors
-    * RelationalBM25.topK, which rounds inside the aggregation).
-    */
-  def searchRounded(query: String, k: Int): DataFrame =
-    merged(query, k, conj = false) match {
-      case None => emptyResult
-      case Some(pool) =>
-        pool.withColumn("score", round(col("score"), 4))
-          .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
 
   /** J2 hydration: join winners back to document attributes. */
   def hydrate(topk: DataFrame, docs: DataFrame): DataFrame =
@@ -437,15 +424,13 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     require(perSource >= 1, s"perSource must be >= 1, got $perSource")
     require(candidates >= k, s"candidates ($candidates) must be >= k ($k)")
     val page = searchRounded(query, candidates)
-    val bySrc = org.apache.spark.sql.expressions.Window
-      .partitionBy(attrCol).orderBy(col("score").desc, col("doc_id").asc)
-    broadcast(page)
+    val bySrc = Window.partitionBy(attrCol).orderBy(PostingIndex.byScore: _*)
+    cut(Some(broadcast(page)
       .join(docAttrs.select(col("doc_id").cast("long").as("doc_id"),
         col(attrCol)), "doc_id")
       .withColumn("rn", row_number().over(bySrc))
       .filter(col("rn") <= perSource)
-      .select(col("doc_id"), col("score"), col(attrCol))
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+      .select(col("doc_id"), col("score"), col(attrCol))), k, rounded = false)
   }
 
   // ---------------------------------------------------------------------
@@ -478,23 +463,14 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     */
   def searchFiltered(query: String, k: Int, allowed: DataFrame,
                      broadcastCap: Int = PostingIndex.filterBroadcastCap): DataFrame =
-    filteredPool(query, k, allowed, broadcastCap) match {
-      case None => emptyResult
-      case Some(pool) =>
-        pool.orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
+    cut(filteredPool(query, k, allowed, broadcastCap), k, rounded = false)
 
-  /** Oracle-comparable form of [[searchFiltered]]: 4-dp rounding before the
-    * k-cut (see [[searchRounded]]).
+  /** Oracle-comparable form of [[searchFiltered]] (the class doc's raw vs
+    * rounded contract).
     */
   def searchFilteredRounded(query: String, k: Int, allowed: DataFrame,
                             broadcastCap: Int = PostingIndex.filterBroadcastCap): DataFrame =
-    filteredPool(query, k, allowed, broadcastCap) match {
-      case None => emptyResult
-      case Some(pool) =>
-        pool.withColumn("score", round(col("score"), 4))
-          .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
+    cut(filteredPool(query, k, allowed, broadcastCap), k, rounded = true)
 
   private def filteredPool(query: String, k: Int, allowed: DataFrame,
                            broadcastCap: Int): Option[DataFrame] = {
@@ -507,8 +483,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     if (probe.length <= broadcastCap) {
       if (probe.isEmpty) return None
       java.util.Arrays.sort(probe)
-      val bc = spark.sparkContext.broadcast(probe)
-      Some(mergedTerms(q, k, conj = false, allowBc = bc))
+      pool(q, k, allowBc = spark.sparkContext.broadcast(probe))
     } else Some(cogroupFilteredPool(q, k, ids))
   }
 
@@ -516,37 +491,56 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * the build's docShard key.
     */
   private def cogroupFilteredPool(q: Seq[(String, Double)], k: Int,
-                                  ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
+                                  ids: Dataset[Long]): DataFrame = {
     import spark.implicits._
-    val terms = q.map(_._1)
-    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
     val qtf = q.toMap
-    val kk = k
     val shardsN = globals.shards
-    val blocks = postingsDF
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
-      .select("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
-        "docs_bin", "wts_bin", "tfs_bin")
-      .as[BlockRow]
-    val exBc = tombstonesBc
-    blocks.groupByKey(_.shard)
+    val ex = exclusion
+    blocks(slice(q.map(_._1))).groupByKey(_.shard)
       .cogroup(ids.groupByKey(IndexFormat.docShard(_, shardsN))) {
         (_, rows, shardIds) =>
           val allow = shardIds.toArray
           if (allow.isEmpty) Iterator.empty
           else {
             java.util.Arrays.sort(allow)
-            val ex = PostingIndex.combinedExclusion(
-              if (exBc == null) null else exBc.value, allow)
-            Wand.topK(rows, qtf, kk, ex)
+            Wand.topK(rows, qtf, k, ex(allow))
           }
       }
       .toDF("doc_id", "score")
   }
 
   // ---------------------------------------------------------------------
-  // Prefix (dictionary-expansion) search (`tok*`-style)
+  // Dictionary-expansion search (prefix `tok*`, wildcard, fuzzy `tok~`)
   // ---------------------------------------------------------------------
+
+  /** The `limit` highest-df vocabulary terms passing `pred` as (term, df),
+    * ranked (df desc, term asc) — fully deterministic. df comes from the
+    * block-level `n` counters — no posting decode — and counts tombstoned
+    * postings until a compact (the overlay statistics contract).
+    */
+  private def dictionary(pred: Column, limit: Int): DataFrame =
+    termDf(postingsDF.filter(pred))
+      .orderBy(col("df").desc, col("term").asc)
+      .limit(limit)
+
+  /** Per-term df of a set of posting blocks, from the block `n` counters. */
+  private def termDf(postings: DataFrame): DataFrame =
+    postings.groupBy("term").agg(sum(col("n")).cast("long").as("df"))
+
+  private def dfByTerm(terms: Seq[String]): Map[String, Long] = {
+    import spark.implicits._
+    termDf(slice(terms)).as[(String, Long)].collect().toMap
+  }
+
+  /** The multi-term tail every dictionary expansion shares: the probed
+    * terms score as one disjunctive query with weight 1 each (Lucene
+    * multi-term-query-with-scoring semantics), rounded k-cut.
+    */
+  private def expansionSearch(probe: DataFrame, k: Int): DataFrame = {
+    import spark.implicits._
+    val terms = probe.select("term").as[String].collect().toSeq.sorted
+    cut(pool(terms.map((_, 1.0)), k), k, rounded = true)
+  }
 
   /** Top-k for a term PREFIX: the index vocabulary is expanded to the
     * `maxExpansions` highest-df terms starting with `prefix` (ties break
@@ -562,22 +556,9 @@ final class PostingIndex(spark: SparkSession, dir: String) {
   def searchPrefixRounded(prefix: String, k: Int,
                           maxExpansions: Int = PostingIndex.defaultMaxExpansions): DataFrame = {
     val p = prefix.toLowerCase(java.util.Locale.ROOT)
-    require(p.nonEmpty && p.forall(c => (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')),
+    require(p.nonEmpty && p.forall(PostingIndex.vocabChar),
       s"prefix must be non-empty [a-z0-9]+, got '$prefix'")
-    import spark.implicits._
-    val expansions: Seq[(String, Double)] = postingsDF
-      .filter(col("term").startsWith(p))
-      .groupBy("term").agg(sum(col("n")).cast("long").as("df"))
-      .orderBy(col("df").desc, col("term").asc)
-      .limit(maxExpansions)
-      .select("term").as[String].collect().toSeq
-      .map(t => (t, 1.0))
-    if (expansions.isEmpty) emptyResult
-    else {
-      mergedTerms(expansions.sortBy(_._1), k, conj = false)
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
+    expansionSearch(dictionary(col("term").startsWith(p), maxExpansions), k)
   }
 
   /** Wildcard query (`s*a?` style): the vocabulary expands to the
@@ -594,31 +575,13 @@ final class PostingIndex(spark: SparkSession, dir: String) {
   def searchWildcardRounded(pattern: String, k: Int,
                             maxExpansions: Int = PostingIndex.defaultMaxExpansions): DataFrame = {
     val p = pattern.toLowerCase(java.util.Locale.ROOT)
-    require(p.nonEmpty && p.forall(c =>
-        (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '*' || c == '?'),
+    require(p.nonEmpty && p.forall(c => PostingIndex.vocabChar(c) || c == '*' || c == '?'),
       s"wildcard pattern must be [a-z0-9*?]+, got '$pattern'")
-    require((p.head >= 'a' && p.head <= 'z') || (p.head >= '0' && p.head <= '9'),
+    require(PostingIndex.vocabChar(p.head),
       s"leading wildcard rejected (full-dictionary scan): '$pattern'")
     val like = p.replace("*", "%").replace("?", "_")
-    import spark.implicits._
-    val expansions: Seq[(String, Double)] = postingsDF
-      .filter(col("term").like(like))
-      .groupBy("term").agg(sum(col("n")).cast("long").as("df"))
-      .orderBy(col("df").desc, col("term").asc)
-      .limit(maxExpansions)
-      .select("term").as[String].collect().toSeq
-      .map(t => (t, 1.0))
-    if (expansions.isEmpty) emptyResult
-    else {
-      mergedTerms(expansions.sortBy(_._1), k, conj = false)
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
+    expansionSearch(dictionary(col("term").like(like), maxExpansions), k)
   }
-
-  // ---------------------------------------------------------------------
-  // Fuzzy (edit-distance dictionary-expansion) search (`tok~`-style)
-  // ---------------------------------------------------------------------
 
   /** Top-k for a MISSPELLED term: the index vocabulary is expanded to the
     * `maxExpansions` highest-df terms within Levenshtein distance
@@ -640,19 +603,8 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * index statistic under the overlay).
     */
   def searchFuzzyRounded(term: String, k: Int, maxEdits: Int = 1,
-                         maxExpansions: Int = PostingIndex.defaultMaxExpansions): DataFrame = {
-    import spark.implicits._
-    val expansions: Seq[(String, Double)] =
-      suggest(term, maxEdits, maxExpansions)
-        .select("term").as[String].collect().toSeq
-        .map(x => (x, 1.0))
-    if (expansions.isEmpty) emptyResult
-    else {
-      mergedTerms(expansions.sortBy(_._1), k, conj = false)
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    }
-  }
+                         maxExpansions: Int = PostingIndex.defaultMaxExpansions): DataFrame =
+    expansionSearch(suggest(term, maxEdits, maxExpansions), k)
 
   /** Query-time synonym expansion (the Lucene synonym-filter surface, as
     * a deterministic cross-engine contract): each analyzed query term t
@@ -676,33 +628,27 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     val q = queryTerms(query)
     if (q.isEmpty) return emptyResult
     val qtf = q.toMap
-    val terms = q.map(_._1)
     // the per-term cap is applied INSIDE the plan (row_number window over
     // the probed rows) so the collect is |query|*cap-bounded by
     // construction — a hot term with a catalog's worth of synonyms never
     // reaches the driver (the window mirrors the oracle twin's SQL)
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy("term").orderBy("syn")
+    val win = Window.partitionBy("term").orderBy("syn")
     val rows = synonyms
-      .filter(col("term").isin(terms: _*))
+      .filter(col("term").isin(q.map(_._1): _*))
       .select("term", "syn").distinct()
       .withColumn("rn", row_number().over(win))
       .filter(col("rn") <= maxExpansionsPerTerm)
       .select("term", "syn").collect()
       .map(r => (r.getString(0), r.getString(1)))
     rows.foreach { case (_, s) =>
-      require(s.nonEmpty && s.forall(c => (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')),
+      require(s.nonEmpty && s.forall(PostingIndex.vocabChar),
         s"synonym must be lowercase [a-z0-9]+, got '$s'") }
     val expanded: Seq[(String, Double)] = rows.toSeq
       .groupBy(_._1).toSeq
       .flatMap { case (t, ss) =>
         ss.map(_._2).distinct.sorted.map(s => (s, qtf(t)))
       }
-    val merged = (q ++ expanded).groupBy(_._1).toSeq
-      .map { case (t, xs) => (t, xs.map(_._2).sum) }.sortBy(_._1)
-    mergedTerms(merged, k, conj = false)
-      .withColumn("score", round(col("score"), 4))
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+    cut(pool(PostingIndex.weights(q ++ expanded), k), k, rounded = true)
   }
 
   /** Did-you-mean term suggestions: the `maxSuggestions` index-vocabulary
@@ -716,15 +662,11 @@ final class PostingIndex(spark: SparkSession, dir: String) {
   def suggest(term: String, maxEdits: Int = 1,
               maxSuggestions: Int = PostingIndex.defaultMaxExpansions): DataFrame = {
     val t = term.toLowerCase(java.util.Locale.ROOT)
-    require(t.nonEmpty && t.forall(c => (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')),
+    require(t.nonEmpty && t.forall(PostingIndex.vocabChar),
       s"suggest term must be non-empty [a-z0-9]+, got '$term'")
     require(maxEdits >= 0 && maxEdits <= 2, s"maxEdits must be 0..2, got $maxEdits")
-    postingsDF
-      .filter(abs(length(col("term")) - lit(t.length)) <= maxEdits &&
-        levenshtein(col("term"), lit(t)) <= maxEdits)
-      .groupBy("term").agg(sum(col("n")).cast("long").as("df"))
-      .orderBy(col("df").desc, col("term").asc)
-      .limit(maxSuggestions)
+    dictionary(abs(length(col("term")) - lit(t.length)) <= maxEdits &&
+      levenshtein(col("term"), lit(t)) <= maxEdits, maxSuggestions)
   }
 
   // ---------------------------------------------------------------------
@@ -762,17 +704,11 @@ final class PostingIndex(spark: SparkSession, dir: String) {
         "(a pure-negation query would enumerate the corpus)")
     // positive weights merge across clauses (term-keyed qtf sums) so the
     // engine and the SQL twin see the identical qt relation
-    val posQtf: Map[String, Double] = (mustQ ++ shouldQ)
-      .groupBy(_._1).map { case (t, xs) => (t, xs.map(_._2).sum) }
+    val posQtf = PostingIndex.weights(mustQ ++ shouldQ).toMap
     val mustSet = mustQ.map(_._1).toSet
-    val exBc = tombstonesBc
-    perShard((posQtf.keySet ++ notTerms).toSeq.sorted) { rows =>
-      val ex = PostingIndex.combinedExclusion(
-        if (exBc == null) null else exBc.value, null)
+    cut(Some(perShard((posQtf.keySet ++ notTerms).toSeq.sorted) { (rows, ex) =>
       Wand.topKBoolean(rows, posQtf, mustSet, notTerms, k, ex)
-    }.toDF("doc_id", "score")
-      .withColumn("score", round(col("score"), 4))
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+    }.toDF("doc_id", "score")), k, rounded = true)
   }
 
   // ---------------------------------------------------------------------
@@ -812,24 +748,16 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       .groupBy(identity).map { case (t, xs) => (t, xs.size.toLong) }
     if (tf.isEmpty) return emptyResult
     val terms = tf.keys.toSeq
-    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
-    val dfByTerm: Map[String, Long] = postingsDF
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
-      .groupBy("term").agg(sum(col("n")).cast("long").as("df"))
-      .as[(String, Long)].collect().toMap
+    val df = dfByTerm(terms)
     // terms absent from the dictionary (possible when the corpus frame
     // outruns the index) carry no signal — drop, like a stop word
     val profile: Seq[(String, Double)] = terms
-      .filter(dfByTerm.contains)
-      .sortBy(t => (-tf(t), dfByTerm(t), t))
+      .filter(df.contains)
+      .sortBy(t => (-tf(t), df(t), t))
       .take(maxTerms)
       .map(t => (t, tf(t).toDouble))
-    if (profile.isEmpty) emptyResult
-    else
-      mergedTerms(profile.sortBy(_._1), k + 1, conj = false)
-        .filter(col("doc_id") =!= docId)
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+    cut(pool(profile.sortBy(_._1), k + 1).map(_.filter(col("doc_id") =!= docId)),
+      k, rounded = true)
   }
 
   // ---------------------------------------------------------------------
@@ -863,18 +791,10 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     if (tombstones.nonEmpty &&
       java.util.Arrays.binarySearch(tombstones, docId) >= 0) return emptyExplain
     val terms = q.map(_._1)
-    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
-    val slice = postingsDF
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
-    val dfByTerm: Map[String, Long] = slice
-      .groupBy("term").agg(sum(col("n")).cast("long").as("df"))
-      .as[(String, Long)].collect().toMap
+    val df = dfByTerm(terms)
     val sh = IndexFormat.docShard(docId, globals.shards)
-    val hits: Seq[(String, Long, Double)] = slice
-      .filter(col("shard") === sh && col("max_doc") >= docId)
-      .select("tb", "shard", "term", "block_id", "n", "max_doc", "max_w",
-        "docs_bin", "wts_bin", "tfs_bin")
-      .as[BlockRow]
+    val hits: Seq[(String, Long, Double)] =
+      blocks(slice(terms).filter(col("shard") === sh && col("max_doc") >= docId))
       .flatMap { r =>
         val ids = Codec.decodeDocIds(r.docs_bin, r.n)
         val i = java.util.Arrays.binarySearch(ids, docId)
@@ -887,8 +807,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     val n = globals.nDocs.toDouble
     hits.sortBy(_._1)
       .map { case (t, tf, w) =>
-        (t, qtf(t), tf, dfByTerm(t), BM25.idf(n, dfByTerm(t).toDouble),
-          w * qtf(t))
+        (t, qtf(t), tf, df(t), BM25.idf(n, df(t).toDouble), w * qtf(t))
       }
       .toDF("term", "qtf", "tf", "df", "idf", "contrib")
       // Spark round (not driver-side rint): the cross-engine rounding
@@ -915,7 +834,6 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * map-side-partial groupBy over `facetCol`. Nothing is collected.
     */
   def facetCounts(query: String, docs: DataFrame, facetCol: String): DataFrame = {
-    import spark.implicits._
     val terms = queryTerms(query).map(_._1)
     val facets = docs.select(col("docId").as("doc_id"),
       col(facetCol).cast("string").as("facet"))
@@ -934,19 +852,14 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     */
   private def matchedDocIds(terms: Seq[String]): DataFrame = {
     import spark.implicits._
-    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
-    val exBc = tombstonesBc
-    postingsDF
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
+    val ex = exclusion
+    slice(terms)
       .select(col("n"), col("docs_bin"))
       .as[(Int, Array[Byte])]
       .flatMap { case (n, bin) =>
         val ids = Codec.decodeDocIds(bin, n)
-        if (exBc == null) ids
-        else {
-          val ex = exBc.value
-          ids.filter(d => java.util.Arrays.binarySearch(ex, d) < 0)
-        }
+        val drop = ex(null)
+        if (drop == null) ids else ids.filterNot(drop)
       }
       .toDF("doc_id")
       .distinct()
@@ -1019,19 +932,17 @@ final class PostingIndex(spark: SparkSession, dir: String) {
   def searchPhraseRounded(phrase: String, k: Int, docs: DataFrame): DataFrame = {
     val seq = analyzer.analyze(phrase)
     if (seq.isEmpty) return emptyResult
-    if (hasFreshPositions) return phrasePositional(seq, k)
-    val candidates = phraseCandidates(seq)
+    if (hasFreshPositions) return positionalWindowed(seq, slop = 0, k)
     // adjacency verification: re-analyze ONLY the AND-matching candidates.
     // The haystack/needle form is exact: analyzed tokens are [a-z0-9]+ so a
     // space-joined stream contains " t1 t2 " iff t1,t2 are adjacent in it.
     val needle = " " + seq.mkString(" ") + " "
     val an = analyzer
     val analyzeJoin = udf((text: String) => " " + an.analyze(text).mkString(" ") + " ")
-    candidates
+    cut(Some(phraseCandidates(seq)
       .join(docs.select(col("docId").as("doc_id"), col("content")), "doc_id")
       .filter(analyzeJoin(col("content")).contains(needle))
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+      .select("doc_id", "score")), k, rounded = true)
   }
 
   /** Index-native phrase search over the positional sidecar
@@ -1045,12 +956,10 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     * mass, not document size.
     */
   def searchPhrasePositionalRounded(phrase: String, k: Int): DataFrame = {
-    require(hasFreshPositions,
-      s"index $dir has no positional sidecar for buildId ${globals.buildId}; " +
-        "run IndexBuilder.buildPositions (append/compact invalidate it)")
+    requirePositions()
     val seq = analyzer.analyze(phrase)
     if (seq.isEmpty) return emptyResult
-    phrasePositional(seq, k)
+    positionalWindowed(seq, slop = 0, k)
   }
 
   /** Positional KWIC — analyzed-term-exact highlighting from the INDEX:
@@ -1071,21 +980,15 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     */
   def kwicPositionalRounded(query: String, k: Int, docs: DataFrame,
                             window: Int = 4): DataFrame = {
-    require(hasFreshPositions,
-      s"index $dir has no positional sidecar for buildId ${globals.buildId}; " +
-        "run IndexBuilder.buildPositions (append/compact invalidate it)")
+    requirePositions()
     val topk = searchRounded(query, k)
     val terms = queryTerms(query).map(_._1)
     if (terms.isEmpty)
       return topk.withColumn("term", lit(""))
         .withColumn("pos", lit(0L)).withColumn("kwic", lit(""))
         .limit(0)
-    val tbs = terms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
-    val pos = spark.read.parquet(s"$dir/positions/data")
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
-      .select("term", "doc_id", "npos", "pos_bin")
     val headPos = udf((bin: Array[Byte], n: Int) => Codec.decodeDocIds(bin, n)(0))
-    val hits = pos.join(broadcast(topk), "doc_id")
+    val hits = positionSlice(terms).join(broadcast(topk), "doc_id")
       .select(col("doc_id"), col("score"),
         struct(headPos(col("pos_bin"), col("npos")).as("pos"),
           col("term").as("term")).as("h"))
@@ -1102,7 +1005,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
       .join(broadcast(hits), "doc_id")
       .select(col("doc_id"), col("score"), col("h.term").as("term"),
         col("h.pos").as("pos"), kwicU(col("content"), col("h.pos")).as("kwic"))
-      .orderBy(col("score").desc, col("doc_id").asc)
+      .orderBy(PostingIndex.byScore: _*)
   }
 
   /** True iff `positions/meta.json` exists and is bound to THIS buildId —
@@ -1120,24 +1023,27 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     }
   }
 
+  private def requirePositions(): Unit =
+    require(hasFreshPositions,
+      s"index $dir has no positional sidecar for buildId ${globals.buildId}; " +
+        "run IndexBuilder.buildPositions (append/compact invalidate it)")
+
+  /** The positional sidecar rows of `terms`, pruned like [[slice]]. */
+  private def positionSlice(terms: Seq[String]): DataFrame =
+    spark.read.parquet(s"$dir/positions/data")
+      .filter(termFilter(terms))
+      .select("term", "doc_id", "npos", "pos_bin")
+
   /** Every conjunctive (AND) match of the phrase terms with its BM25 score
     * — no k-cut (the adjacency filter downstream must not be starved).
     */
   private def phraseCandidates(seq: Array[String]): DataFrame = {
     import spark.implicits._
-    val q = seq.groupBy(identity).toSeq
-      .map { case (t, xs) => (t, xs.size.toDouble) }.sortBy(_._1)
+    val q = PostingIndex.weights(seq.toSeq.map((_, 1.0)))
     val qtf = q.toMap
-    val exBc = tombstonesBc
-    perShard(q.map(_._1)) { rows =>
-      val ex = PostingIndex.combinedExclusion(
-        if (exBc == null) null else exBc.value, null)
-      Wand.conjunctiveAll(rows, qtf, ex)
-    }.toDF("doc_id", "score")
+    perShard(q.map(_._1)) { (rows, ex) => Wand.conjunctiveAll(rows, qtf, ex) }
+      .toDF("doc_id", "score")
   }
-
-  private def phrasePositional(seq: Array[String], k: Int): DataFrame =
-    positionalWindowed(seq, slop = 0, k)
 
   /** Proximity search (sloppy ordered phrase) over the positional
     * sidecar: a document matches iff its analyzed stream contains
@@ -1152,9 +1058,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
     */
   def searchProximityRounded(phrase: String, slop: Int, k: Int): DataFrame = {
     require(slop >= 0, s"slop must be >= 0, got $slop")
-    require(hasFreshPositions,
-      s"index $dir has no positional sidecar for buildId ${globals.buildId}; " +
-        "run IndexBuilder.buildPositions (append/compact invalidate it)")
+    requirePositions()
     val seq = analyzer.analyze(phrase)
     require(seq.length >= 2,
       s"proximity needs >= 2 surviving terms, got '${seq.mkString(" ")}'")
@@ -1171,15 +1075,10 @@ final class PostingIndex(spark: SparkSession, dir: String) {
   private def positionalWindowed(seq: Array[String], slop: Int,
                                  k: Int): DataFrame = {
     import spark.implicits._
-    val candidates = phraseCandidates(seq)
-    val distinctTerms = seq.distinct.sorted.toSeq
-    val tbs = distinctTerms.map(IndexFormat.termBucket(_, globals.termBuckets)).distinct
-    val pos = spark.read.parquet(s"$dir/positions/data")
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(distinctTerms: _*))
-      .select("term", "doc_id", "npos", "pos_bin")
     val phraseSeq = seq // ordered tokens, duplicates included
     val bound = (phraseSeq.length - 1).toLong + slop
-    val verified = pos.join(candidates, "doc_id")
+    val verified = positionSlice(seq.distinct.sorted.toSeq)
+      .join(phraseCandidates(seq), "doc_id")
       .select(col("doc_id"), col("score"), col("term"), col("npos"), col("pos_bin"))
       .as[(Long, Double, String, Int, Array[Byte])]
       .groupByKey { case (d, s, _, _, _) => (d, s) }
@@ -1209,8 +1108,7 @@ final class PostingIndex(spark: SparkSession, dir: String) {
         if (ok) Iterator.single(key) else Iterator.empty
       }
       .toDF("doc_id", "score")
-    verified.withColumn("score", round(col("score"), 4))
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+    cut(Some(verified), k, rounded = true)
   }
 }
 
@@ -1230,6 +1128,33 @@ object PostingIndex {
     * Lucene-default-shaped bound on multi-term blowup).
     */
   val defaultMaxExpansions: Int = 16
+
+  /** The [[BlockRow]] columns, in the encoder's order. */
+  private val blockCols = Seq("tb", "shard", "term", "block_id", "n",
+    "max_doc", "max_w", "docs_bin", "wts_bin", "tfs_bin")
+
+  private val byScore = Seq(col("score").desc, col("doc_id").asc)
+
+  /** The index vocabulary alphabet: analyzed terms are [a-z0-9]+. */
+  private def vocabChar(c: Char): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
+
+  /** Merges repeated terms by summing their weights, in term order (the
+    * order WAND sums in); the qtf of an unweighted token list is its
+    * multiplicity.
+    */
+  private def weights(q: Seq[(String, Double)]): Seq[(String, Double)] =
+    q.groupBy(_._1).toSeq.map { case (t, xs) => (t, xs.map(_._2).sum) }.sortBy(_._1)
+
+  /** One shard's WAND for every query of a batch: each (query_id, qtf)
+    * runs over the term-filtered view of the shard's materialized blocks.
+    */
+  private def batchTopK(blocks: Array[BlockRow], queries: Iterator[(Long, Map[String, Double])],
+                        k: Int, ex: Long => Boolean): Iterator[(Long, Long, Double)] =
+    queries.flatMap { case (qid, qtf) =>
+      Wand.topK(blocks.iterator.filter(r => qtf.contains(r.term)), qtf, k, ex)
+        .map { case (d, s) => (qid, d, s) }
+    }
 
   /** Fuses the tombstone overlay and an optional allow-list into the single
     * exclusion predicate the DAAT loops take. `null` inputs mean "absent";

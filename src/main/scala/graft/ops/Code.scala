@@ -128,6 +128,42 @@ object Code {
     WHEN 4 THEN 'docs/readme' || doc_id || '.md'
     ELSE 'src/test/spec' || doc_id || '.scala' END)"""
 
+  // ---- per-file predicates (the file gates and the scorecard share them) --
+
+  /** Match counts of the three credential detectors (AWS access-key id,
+    * PEM private-key header, hardcoded api_key literal) over `code`.
+    */
+  private def secretCounts(code: Column): Seq[Column] =
+    Seq("AKIA[0-9A-Z]{16}", "-----BEGIN [A-Z]+ PRIVATE KEY-----",
+      "api_key = \"[0-9a-f]{32}\"").map(p => regexp_count(code, lit(p)).cast("long"))
+
+  private def hasSecret(counts: Seq[Column]): Column = counts.reduce(_ + _) > 0
+
+  private def vendored(path: Column): Column =
+    startswith(path, lit("node_modules/")) || startswith(path, lit("vendor/"))
+
+  private def generated(path: Column, code: Column): Column =
+    contains(path, lit("/generated/")) || endswith(path, lit(".min.js")) ||
+      startswith(code, lit("// Code generated"))
+
+  /** (n_lines, n_chars, max_line_len, n_alnum) of `code`. */
+  private def lineStats(code: Column): Seq[Column] = Seq(
+    size(split(code, "\n")).cast("long"),
+    length(code).cast("long"),
+    array_max(transform(split(code, "\n"), x => length(x))).cast("long"),
+    length(regexp_replace(code, "[^A-Za-z0-9]", "")).cast("long"))
+
+  /** Mean line length, 6-dp rounded; Σ line lengths = n_chars - (n_lines - 1). */
+  private def avgLineLen(nLines: Column, nChars: Column): Column =
+    round((nChars - (nLines - 1)) / nLines, 6)
+
+  private def alnumFrac(nAlnum: Column, nChars: Column): Column =
+    round(nAlnum / nChars, 6)
+
+  private def qualityOk(maxLineLen: Column, avgLine: Column, alnum: Column,
+                        maxLineCap: Int, avgLineCap: Double, alnumFloor: Double): Column =
+    maxLineLen <= maxLineCap && avgLine <= avgLineCap && alnum >= alnumFloor
+
   // ---- per-file metrics + keep verdict -----------------------------------
 
   /** Codex-paper / The-Stack-style file-quality metrics and keep verdict:
@@ -144,22 +180,15 @@ object Code {
                   avgLineCap: Double = 100.0, alnumFloor: Double = 0.25,
                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val code = syntheticCode(col(idCol), col(textCol))
+    val Seq(nLines, nChars, maxLineLen, nAlnum) = lineStats(col("code"))
     docs.select(col(idCol).cast("long").as("doc_id"), code.as("code"))
-      .select(col("doc_id"),
-        size(split(col("code"), "\n")).cast("long").as("n_lines"),
-        length(col("code")).cast("long").as("n_chars"),
-        array_max(transform(split(col("code"), "\n"), x => length(x)))
-          .cast("long").as("max_line_len"),
-        length(regexp_replace(col("code"), "[^A-Za-z0-9]", ""))
-          .cast("long").as("n_alnum"))
+      .select(col("doc_id"), nLines.as("n_lines"), nChars.as("n_chars"),
+        maxLineLen.as("max_line_len"), nAlnum.as("n_alnum"))
       .select(col("doc_id"), col("n_lines"), col("n_chars"), col("max_line_len"),
-        round((col("n_chars") - (col("n_lines") - 1)) / col("n_lines"), 6)
-          .as("avg_line_len"),
-        round(col("n_alnum") / col("n_chars"), 6).as("alnum_frac"))
-      .withColumn("kept",
-        col("max_line_len") <= maxLineCap &&
-          col("avg_line_len") <= avgLineCap &&
-          col("alnum_frac") >= alnumFloor)
+        avgLineLen(col("n_lines"), col("n_chars")).as("avg_line_len"),
+        alnumFrac(col("n_alnum"), col("n_chars")).as("alnum_frac"))
+      .withColumn("kept", qualityOk(col("max_line_len"), col("avg_line_len"),
+        col("alnum_frac"), maxLineCap, avgLineCap, alnumFloor))
   }
 
   /** DuckDB twin of the `code_metrics` gate. */
@@ -192,15 +221,11 @@ FROM r ORDER BY doc_id"""
   def secretScan(docs: DataFrame, idCol: String = "doc_id",
                  textCol: String = "text"): DataFrame = {
     val code = syntheticCode(col(idCol), col(textCol))
+    val Seq(aws, pem, apiKey) = secretCounts(col("code"))
     docs.select(col(idCol).cast("long").as("doc_id"), code.as("code"))
-      .select(col("doc_id"),
-        regexp_count(col("code"), lit("AKIA[0-9A-Z]{16}")).cast("long").as("n_aws"),
-        regexp_count(col("code"), lit("-----BEGIN [A-Z]+ PRIVATE KEY-----"))
-          .cast("long").as("n_pem"),
-        regexp_count(col("code"), lit("api_key = \"[0-9a-f]{32}\""))
-          .cast("long").as("n_apikey"))
+      .select(col("doc_id"), aws.as("n_aws"), pem.as("n_pem"), apiKey.as("n_apikey"))
       .withColumn("has_secret",
-        col("n_aws") + col("n_pem") + col("n_apikey") > 0)
+        hasSecret(Seq(col("n_aws"), col("n_pem"), col("n_apikey"))))
   }
 
   /** DuckDB twin of the `code_secret_scan` gate. */
@@ -272,12 +297,8 @@ FROM mix ORDER BY license"""
     val path = syntheticPath(col(idCol))
     docs.select(col(idCol).cast("long").as("doc_id"), path.as("path"),
         code.as("code"))
-      .select(col("doc_id"), col("path"),
-        (startswith(col("path"), lit("node_modules/")) ||
-          startswith(col("path"), lit("vendor/"))).as("vendored"),
-        (contains(col("path"), lit("/generated/")) ||
-          endswith(col("path"), lit(".min.js")) ||
-          startswith(col("code"), lit("// Code generated"))).as("generated"))
+      .select(col("doc_id"), col("path"), vendored(col("path")).as("vendored"),
+        generated(col("path"), col("code")).as("generated"))
       .withColumn("kept", !col("vendored") && !col("generated"))
   }
 
@@ -316,22 +337,13 @@ FROM v ORDER BY doc_id"""
     val code = syntheticCode(id, col(textCol))
     val path = syntheticPath(id)
     val repo = format_string("org%d/repo%d", pmod(id, lit(7L)), pmod(id, lit(13L)))
-    val secret =
-      regexp_count(code, lit("AKIA[0-9A-Z]{16}")) +
-        regexp_count(code, lit("-----BEGIN [A-Z]+ PRIVATE KEY-----")) +
-        regexp_count(code, lit("api_key = \"[0-9a-f]{32}\"")) > 0
+    val secret = hasSecret(secretCounts(code))
     val gpl = contains(code, lit("GNU General Public License"))
-    val vendoredOrGen =
-      startswith(path, lit("node_modules/")) || startswith(path, lit("vendor/")) ||
-        contains(path, lit("/generated/")) || endswith(path, lit(".min.js")) ||
-        startswith(code, lit("// Code generated"))
-    val nLines = size(split(code, "\n"))
-    val nChars = length(code)
-    val qualityOk =
-      array_max(transform(split(code, "\n"), x => length(x))) <= maxLineCap &&
-        round((nChars - (nLines - 1)) / nLines, 6) <= avgLineCap &&
-        round(length(regexp_replace(code, "[^A-Za-z0-9]", "")) / nChars, 6) >= alnumFloor
-    val kept = !secret && !vendoredOrGen && qualityOk
+    val vendoredOrGen = vendored(path) || generated(path, code)
+    val Seq(nLines, nChars, maxLineLen, nAlnum) = lineStats(code)
+    val kept = !secret && !vendoredOrGen &&
+      qualityOk(maxLineLen, avgLineLen(nLines, nChars), alnumFrac(nAlnum, nChars),
+        maxLineCap, avgLineCap, alnumFloor)
     docs
       .select(repo.as("repo"), secret.as("s"), gpl.as("g"),
         vendoredOrGen.as("v"), kept.as("k"))

@@ -34,6 +34,8 @@ import graft.index.{IndexCache, Manifest, PostingIndex}
   * is ignored rather than rejected.
   *
   * `limit` must be an integer in 1..[[SearchServer.maxLimit]], else 400;
+  * a cursor needs both `after_score` (a number, not NaN) and `after_doc`
+  * (an integer), else 400;
   * a request the engine rejects (e.g. a pure-negation boolean query) is a
   * 400 with the reason, any other failure a 500 `{"error":"internal
   * error"}` with the exception logged, never echoed.
@@ -128,14 +130,22 @@ final class SearchServer(spark: SparkSession, sfDir: String, port: Int) {
         // -> search_after deep pagination
         val must = jsonField(body, "must").getOrElse("")
         val mustNot = jsonField(body, "must_not").getOrElse("")
-        val afterScore = jsonField(body, "after_score").flatMap(_.toDoubleOption)
+        val afterScore = jsonField(body, "after_score")
+        val afterDoc = jsonField(body, "after_doc")
+        val cursor =
+          if (afterScore.isEmpty && afterDoc.isEmpty) None
+          else (afterScore.flatMap(_.toDoubleOption).filterNot(_.isNaN),
+              afterDoc.flatMap(_.toLongOption)) match {
+            case (Some(s), Some(d)) => Some((s, d))
+            case _ => throw new IllegalArgumentException(
+              "after_score (a number, not NaN) and after_doc (an integer) " +
+                "must be given together")
+          }
         val top =
           if (must.nonEmpty || mustNot.nonEmpty)
             idx.searchBooleanRounded(must, query, mustNot, limit)
-          else if (afterScore.isDefined)
-            idx.searchAfterRounded(query, limit, afterScore.get,
-              jsonField(body, "after_doc").flatMap(_.toLongOption)
-                .getOrElse(Long.MinValue))
+          else if (cursor.isDefined)
+            idx.searchAfterRounded(query, limit, cursor.get._1, cursor.get._2)
           else if (conj) idx.searchConjunctive(query, limit)
           else idx.search(query, limit)
         val rows = broadcastHydrate(top)

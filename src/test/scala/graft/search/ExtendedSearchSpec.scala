@@ -108,6 +108,39 @@ class ExtendedSearchSpec extends AnyFunSuite {
     }
   }
 
+  test("expansion forms compose with the tombstone overlay: prefix, wildcard, fuzzy, synonyms") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-ext-exp-del").toString
+    IndexBuilder.build(spark, docs, dir, cfg)
+    val toDelete = docs.filter(pmod(col("docId"), lit(5L)) === 2).select("docId")
+    IndexBuilder.delete(spark, toDelete, dir, "d1")
+    PostingIndex.invalidate(dir)
+    val deleted = toDelete.collect().map(_.getLong(0)).toSet
+    val idx2 = PostingIndex.forDir(spark, dir)
+
+    val vocab: Seq[String] = spark.read.parquet(s"$idxDir/postings")
+      .groupBy("term").agg(org.apache.spark.sql.functions.sum("n").as("df"))
+      .as[(String, Long)].collect().toSeq
+      .sortBy { case (t, df) => (-df, t) }.map(_._1)
+    val t0 = vocab.find(_.length >= 5).get
+    val fuzz = t0.updated(1, if (t0(1) == 'q') 'x' else 'q')
+    val syns = Seq((idx.queryTerms(query).head._1, vocab(0)),
+      (idx.queryTerms(query).head._1, vocab(1))).toDF("term", "syn")
+    val forms: Seq[(String, (PostingIndex, Int) => DataFrame)] = Seq(
+      "prefix" -> ((h, k) => h.searchPrefixRounded("s", k, maxExpansions = 3)),
+      "wildcard" -> ((h, k) => h.searchWildcardRounded(s"${t0.head}*${t0.last}", k, 3)),
+      "fuzzy" -> ((h, k) => h.searchFuzzyRounded(fuzz, k, maxEdits = 1)),
+      "synonyms" -> ((h, k) => h.searchSynonymsRounded(query, syns, k)))
+    // expansion sets match: df counts include tombstoned postings until a
+    // compact, so the deleted index expands exactly like the undeleted one
+    for ((name, form) <- forms) {
+      val full = res(form(idx, 1000))
+      assert(full.exists { case (d, _) => deleted.contains(d) }, name)
+      val expected = full.filterNot { case (d, _) => deleted.contains(d) }.take(10)
+      assert(res(form(idx2, 10)) == expected, name)
+    }
+  }
+
   test("filtered search: empty allow set and empty-term query yield empty results") {
     val none = docs.filter(lit(false)).select("docId")
     assert(res(idx.searchFiltered(query, 10, none)).isEmpty)

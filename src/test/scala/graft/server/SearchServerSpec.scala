@@ -164,6 +164,27 @@ class SearchServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cNeg == 400 && neg.contains("pure-negation"), neg)
   }
 
+  test("a pagination cursor needs a non-NaN after_score and an integer after_doc, else 400") {
+    val base = s"http://localhost:${shared.boundPort}"
+    val q = """"query": "table scan merge", "limit": 5"""
+    for (bad <- Seq(""""after_score": NaN, "after_doc": 394""",
+        """"after_score": "NaN", "after_doc": 394""",
+        """"after_score": "abc", "after_doc": 394""",
+        """"after_score": 1.0588""",
+        """"after_doc": 394""",
+        """"after_score": 1.0588, "after_doc": 1.5""")) {
+      val (c, body) = http("POST", s"$base/search", Some(s"{$q, $bad}"))
+      assert(c == 400 && body.contains("after_doc"), s"$bad: $c $body")
+    }
+    val (cOk, hits) = http("POST", s"$base/search",
+      Some(s"""{$q, "after_score": 1.0588, "after_doc": 394}"""))
+    assert(cOk == 200 && hits.startsWith("["), hits)
+    // library callers get the same check
+    val idxH = graft.index.PostingIndex.forDir(spark, IndexCache.dirFor(spark, sfDir, stem = true))
+    intercept[IllegalArgumentException](
+      idxH.searchAfterRounded("table scan merge", 5, Double.NaN, 394L))
+  }
+
   test("a hit whose doc is missing from the corpus keeps id, score, url; text fields empty") {
     val corpus = Files.createTempDirectory("graft-srv-missing")
     val docs = corpus.resolve("documents.parquet")
